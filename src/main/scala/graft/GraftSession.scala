@@ -35,10 +35,16 @@ object GraftSession {
     *    drop 99% in the join" into "drop 99% at the scan". The size
     *    thresholds (creation side ≤ 10 MB plan default, application
     *    side ≥ 10 GB) mean it never fires at local spec scale;
-    *    RuntimeFilterSpec lowers them to pin the injected plan shape.
+    *    RuntimeFilterSpec lowers them to pin the injected plan shape;
+    *  - ANSI mode on, pinned even when the builder or cluster conf
+    *    carries `ansi.enabled=false`: the 64-bit money and log-prob folds
+    *    (`Cents`) rely on an overflowing long sum raising
+    *    `ARITHMETIC_OVERFLOW`; with ANSI off the same sum silently wraps
+    *    and decimal overflow turns into NULL (`GraftSessionSpec`).
     */
   def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

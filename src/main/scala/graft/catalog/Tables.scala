@@ -1,6 +1,10 @@
 package graft.catalog
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog over the driver-provided parquet star schema (TESTDATA.md).
   *
@@ -13,10 +17,123 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the scan by Catalyst (verify via `.explain` → `PushedFilters`/
   * `ReadSchema`). At 100 TB these would be partitioned/bucketed table
   * locations; the loader shape (one path per logical table) is unchanged.
+  *
+  * Every parquet read of a warehouse target or input table goes through
+  * [[read]], which infers a path's schema once per session. A plain
+  * `spark.read.parquet` launches a one-task footer-inference job on every
+  * call; the daily path reads the same targets dozens of times per run.
+  *
+  * Memo validity rule: Spark's (non-merging) inference reads the footer
+  * of exactly one file, the lexicographically first visible data file
+  * under the path (hidden `_`/`.` names excluded, as Spark's file index
+  * excludes them). A memo entry records that file's path, length and
+  * modification time, listed through the Hadoop `FileSystem`, plus the
+  * session's parquet read settings; it is used only while all of them
+  * are unchanged. Parquet files are immutable once written, so an
+  * unchanged first file means a fresh inference would return the same
+  * data schema. Appends that add later files keep the entry; overwrites,
+  * repairs down to the empty marker and out-of-band rewrites replace the
+  * first file and force a re-inference. Partition columns are never
+  * memoized: they are inferred from the directory names on every read,
+  * exactly as a fresh read does (a non-ISO `date_key=` dir turns the
+  * column into a string either way). Paths with no visible data file, a
+  * parquet summary file, or `mergeSchema` on fall back to the plain read,
+  * so their errors and behaviour stay those of `spark.read.parquet`.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** The data (non-partition) schema inferred for a path, valid while the
+    * inference file and the read settings are unchanged. */
+  private final case class SchemaMemo(file: (String, Long, Long),
+      settings: Map[String, String], dataSchema: StructType)
+
+  private val memos = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, SchemaMemo]]())
+
+  /** The engine's one parquet read path: `spark.read.parquet(path)`
+    * without the per-call schema-inference job (see the validity rule in
+    * the object scaladoc). */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val settings = parquetSettings(spark)
+    val file =
+      if (settings.get("spark.sql.parquet.mergeSchema")
+          .exists(_.equalsIgnoreCase("true"))) None
+      else inferenceFile(spark, path)
+    file match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val token = (f.getPath.toString, f.getLen, f.getModificationTime)
+        val memo = memos.computeIfAbsent(spark,
+          _ => new ConcurrentHashMap[String, SchemaMemo]())
+        Option(memo.get(path)) match {
+          case Some(m) if m.file == token && m.settings == settings =>
+            spark.read.schema(m.dataSchema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            df.queryExecution.analyzed.collectFirst {
+              case l: LogicalRelation => l.relation
+            } match {
+              // a data column that shadows a partition column resolves
+              // differently under a user schema: never memoize it
+              case Some(h: HadoopFsRelation) if !h.dataSchema.fieldNames
+                  .exists(h.partitionSchema.fieldNames.contains) =>
+                memo.put(path, SchemaMemo(token, settings, h.dataSchema))
+              case _ => memo.remove(path)
+            }
+            df
+        }
+    }
+  }
+
+  /** Session settings that change what a parquet footer infers to. */
+  private def parquetSettings(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+
+  private def summary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** Spark's file-index rule for names it never reads. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !summary(name)
+
+  private final class SummaryFile extends RuntimeException
+
+  /** The lexicographically first visible data file under `path` (or the
+    * path itself when it is a file): the file whose footer Spark's schema
+    * inference reads. None for a missing path, a path with no data file,
+    * or a visited directory holding a parquet summary file (inference
+    * would prefer the summary). Children are visited in the order of
+    * their full path strings (a directory sorts as its name plus `/`), so
+    * the descent lists only the directories on the way to that file. */
+  private[graft] def inferenceFile(spark: SparkSession,
+      path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def first(dir: Path): Option[FileStatus] = {
+      val kids = fs.listStatus(dir).filterNot(k => hidden(k.getPath.getName))
+      if (kids.exists(k => !k.isDirectory && summary(k.getPath.getName)))
+        throw new SummaryFile
+      kids.sortBy(k =>
+          if (k.isDirectory) k.getPath.getName + "/" else k.getPath.getName)
+        .iterator
+        .map(k => if (k.isDirectory) first(k.getPath) else Some(k))
+        .collectFirst { case Some(f) => f }
+    }
+    try {
+      val st = fs.getFileStatus(root)
+      if (st.isDirectory) first(root) else Some(st)
+    } catch {
+      case _: java.io.FileNotFoundException | _: SummaryFile => None
+    }
+  }
 
   /** Normalize `events.ts` to a plain TimestampType (LTZ) microsecond
     * column regardless of the upstream file's physical encoding — the
@@ -97,7 +214,7 @@ object Tables {
     */
   def registerClone(s: SparkSession, cloneName: String,
       sourcePath: String): Unit =
-    s.read.parquet(sourcePath).createOrReplaceTempView(cloneName)
+    read(s, sourcePath).createOrReplaceTempView(cloneName)
 
   /** S1's SQL-name query surface: publish each materialized warehouse
     * target (model name → parquet path) as a metadata-only view, so
@@ -115,7 +232,7 @@ object Tables {
   def registerAll(s: SparkSession,
       targets: Seq[(String, String)]): Seq[String] =
     targets.map { case (name, path) =>
-      s.read.parquet(path).createOrReplaceTempView(name)
+      read(s, path).createOrReplaceTempView(name)
       name
     }
 }

@@ -121,8 +121,8 @@ final class AnnIndexPipeline(spark: SparkSession, warehouseDir: String) {
       : org.apache.spark.sql.DataFrame =
     SimilarityModels.adcSearch(
       SimilarityModels.doubledEmb(queries),
-      spark.read.parquet(targetPath("ann_coarse_codebook")),
-      spark.read.parquet(targetPath("ann_pq_codebook")),
+      Tables.read(spark, targetPath("ann_coarse_codebook")),
+      Tables.read(spark, targetPath("ann_pq_codebook")),
       liveCodes, k, nprobe)
 
   private def hadoopFs: org.apache.hadoop.fs.FileSystem =
@@ -144,14 +144,14 @@ final class AnnIndexPipeline(spark: SparkSession, warehouseDir: String) {
   private def tombstones: org.apache.spark.sql.DataFrame = {
     SwapWrite.recover(spark, targetPath("ann_tombstones"))
     if (fsExists("ann_tombstones"))
-      spark.read.parquet(targetPath("ann_tombstones"))
+      Tables.read(spark, targetPath("ann_tombstones"))
         .select($"vec_id").distinct()
     else spark.range(0).select($"id".as("vec_id"))
   }
 
   /** The searchable index: codes minus the delete log. */
   private def liveCodes: org.apache.spark.sql.DataFrame =
-    spark.read.parquet(targetPath("ann_codes"))
+    Tables.read(spark, targetPath("ann_codes"))
       .join(tombstones, Seq("vec_id"), "left_anti")
 
   /** DELETE from the index (FAISS `remove_ids` / Milvus delete /

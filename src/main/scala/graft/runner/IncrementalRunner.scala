@@ -63,10 +63,12 @@ final case class ModelDef(
   *     (SURVEY.md §7.4 trap 1).
   *
   * Scale: targets are parquet directories partitioned by `date_key`, so
-  * the watermark probe reads only the partition listing + footer stats and
-  * the incremental predicate prunes partitions on read. Repair rewrites
-  * only the partitions at/after the cut date (dynamic partition overwrite),
-  * not the whole table.
+  * the watermark probe is a listing of the target's `date_key=` directory
+  * names (no data or footer is read) and the incremental predicate prunes
+  * partitions on read. Repair drops only the partition directories
+  * at/after the cut date, not the whole table. Every target read goes
+  * through `Tables.read`, which infers a target's schema once per session
+  * instead of launching a footer-inference job per read.
   */
 final class IncrementalRunner(
     spark: SparkSession,
@@ -89,15 +91,34 @@ final class IncrementalRunner(
     new java.io.File(targetPath(name)).exists()
 
   def readModel(name: String): DataFrame =
-    spark.read.parquet(targetPath(name))
+    graft.catalog.Tables.read(spark, targetPath(name))
 
-  /** High watermark = max(date_key) already in the target. */
+  /** High watermark = max(date_key) already in the target, read from the
+    * partition-directory names: the greatest ISO `date_key=` directory
+    * that holds a visible data file. Non-ISO directories (a null
+    * date_key's `__HIVE_DEFAULT_PARTITION__`) hold no comparable date and
+    * are skipped. A missing target, or one with no such directory (the
+    * empty schema-bearing marker), reports [[Epoch]]. No data is read. */
   def watermark(name: String): String =
-    if (!exists(name)) Epoch
-    else {
-      val row = readModel(name).agg(max($"date_key").cast("string")).head()
-      if (row.isNullAt(0)) Epoch else row.getString(0)
-    }
+    partitionDirs(name).flatMap(d => partitionDate(d).map(_ -> d))
+      .sortBy(_._1)(Ordering[LocalDate].reverse)
+      .collectFirst { case (date, d) if graft.catalog.Tables
+          .inferenceFile(spark, d.getPath).isDefined => date.toString }
+      .getOrElse(Epoch)
+
+  /** The target's `date_key=` partition directories (none when the
+    * target is missing). */
+  private def partitionDirs(name: String): Array[java.io.File] =
+    Option(new java.io.File(targetPath(name)).listFiles())
+      .getOrElse(Array.empty)
+      .filter(d => d.isDirectory && d.getName.startsWith("date_key="))
+
+  /** A partition directory's date; None for a name that is not an ISO
+    * date (a null date_key's `__HIVE_DEFAULT_PARTITION__`, or an
+    * externally-written dir). */
+  private def partitionDate(d: java.io.File): Option[LocalDate] =
+    scala.util.Try(LocalDate.parse(d.getName.stripPrefix("date_key=")))
+      .toOption
 
   /** Rows of `df` above the watermark and inside closed periods only. */
   private def incrementalSlice(df: DataFrame, m: ModelDef): DataFrame = {
@@ -207,8 +228,13 @@ final class IncrementalRunner(
         date_trunc(m.cadence.truncUnit, lit(today.toString)).cast("date"))
     val out = df.cache()
     val n = out.count()
-    rebalanced(out, m.clusterBy).write.mode(SaveMode.Overwrite)
-      .partitionBy("date_key").parquet(targetPath(m.name))
+    if (n > 0)
+      rebalanced(out, m.clusterBy).write.mode(SaveMode.Overwrite)
+        .partitionBy("date_key").parquet(targetPath(m.name))
+    else
+      // a partitioned empty write emits no files, leaving an unreadable
+      // target: write the same schema-bearing marker runIncremental does
+      out.write.mode(SaveMode.Overwrite).parquet(targetPath(m.name))
     out.unpersist()
     n
   }
@@ -273,24 +299,15 @@ final class IncrementalRunner(
       if (f.isDirectory) f.listFiles().foreach(rmrf)
       f.delete(): Unit
     }
-    val root = new java.io.File(targetPath(m.name))
-    val allPartDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("date_key="))
+    val allPartDirs = partitionDirs(m.name)
     // a target with zero partition dirs is the empty schema-bearing
     // marker — nothing to delete, report no repair happened
     if (allPartDirs.isEmpty) return false
-    // tolerate partition values that aren't ISO dates (a null date_key's
-    // __HIVE_DEFAULT_PARTITION__, or externally-written dirs): they can
-    // never be ≥ a date cutoff, so skip them instead of aborting the
-    // whole registry-wide cleanup on an unparseable name
-    val partDirs = allPartDirs.flatMap { d =>
-      scala.util.Try(
-        LocalDate.parse(d.getName.stripPrefix("date_key=")))
-        .toOption.map(d -> _)
-    }
-    val doomed = partDirs.collect {
-      case (d, date) if !date.isBefore(truncated) => d
-    }
+    // tolerate partition values that aren't ISO dates: they can never be
+    // ≥ a date cutoff, so skip them instead of aborting the whole
+    // registry-wide cleanup on an unparseable name
+    val doomed = allPartDirs.filter(d =>
+      partitionDate(d).exists(!_.isBefore(truncated)))
     if (doomed.isEmpty) return false
     if (doomed.length == allPartDirs.length) {
       // repair empties the table: a partition dir with no data files is
@@ -351,9 +368,7 @@ final class IncrementalRunner(
         tmp.listFiles().foreach(f => f.delete(): Unit)
         tmp.delete(): Unit
       }
-    val partDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("date_key="))
-    partDirs.flatMap { d =>
+    partitionDirs(name).flatMap { d =>
       val dataFiles = d.listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       val want = math.max(1, math.ceil(

@@ -64,7 +64,7 @@ final class ParquetServingStore(spark: SparkSession, servingDir: String)
   override def watermark(table: String, col: String): Option[String] =
     if (!exists(table)) None
     else {
-      val r = spark.read.parquet(location(table))
+      val r = graft.catalog.Tables.read(spark, location(table))
         .agg(max(org.apache.spark.sql.functions.col(col)).cast("string"))
         .head()
       if (r.isNullAt(0)) None else Some(r.getString(0))
@@ -88,7 +88,7 @@ final class ParquetServingStore(spark: SparkSession, servingDir: String)
       cutoff: java.time.LocalDate): Boolean =
     if (!exists(table)) false
     else {
-      val cur = spark.read.parquet(location(table))
+      val cur = graft.catalog.Tables.read(spark, location(table))
       val total = cur.count()
       val keep = cur
         .filter(org.apache.spark.sql.functions.col(col) <

@@ -4,6 +4,8 @@
 # round driver grades (Verify -> CORRECTNESS, Bench -> BENCH, smoke),
 # so an environment-sensitive break (e.g. a testdata re-encoding)
 # surfaces locally before the driver run, not during it.
+# Last, one short perfbench pipeline_daily run (backfill + one checked
+# re-land) must report correct=true and failed=0.
 #
 # Usage: tools/precommit.sh [sf-dir]     (default /root/testdata/sf0.001)
 set -euo pipefail
@@ -27,5 +29,10 @@ echo "== bench @ $SF (rc + per-query JSON) =="
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Bench" \
   | grep -o '{"metric".*}' | tee "$OUT/bench.json" >/dev/null
 python3 -c "import json;d=json.load(open('$OUT/bench.json'));print('bench ok: %.1fs over %d queries'%(d['value'],len(d['queries'])))"
+
+echo "== perfbench pipeline_daily (every op checked) =="
+python3 perfbench/run.py --workload pipeline_daily --seed 1 --seconds 1 --trace 0 \
+  | tail -n 1 | tee "$OUT/perfbench.json"
+python3 -c "import json,sys;d=json.load(open('$OUT/perfbench.json'));ok=d['correct'] is True and d['failed']==0;print('perfbench ok' if ok else 'perfbench FAILED: correct=%s failed=%s'%(d['correct'],d['failed']));sys.exit(0 if ok else 1)"
 
 echo "PRECOMMIT GREEN ($OUT)"
